@@ -87,12 +87,7 @@ object Bench {
       .config("spark.cleaner.periodicGC.interval", "5min")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // stable artifact root (see Verify): bench runs measure QUERY cost,
-    // not the one-time shared-artifact builds a prior run already paid
-    if (graft.operators.ArtifactStore.configuredRoot(spark).isEmpty)
-      spark.conf.set("spark.graft.artifactRoot",
-        new java.io.File(sys.props("java.io.tmpdir"), "graft_artifacts")
-          .getAbsolutePath)
+    graft.operators.ArtifactStore.useStableRoot(spark)
     def loadAvg: Double = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
     val loadStart = loadAvg

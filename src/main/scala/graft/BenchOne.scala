@@ -17,8 +17,7 @@ object BenchOne {
       .config("spark.sql.shuffle.partitions", threads.toString)
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    spark.conf.set("spark.graft.artifactRoot",
-      new java.io.File(sys.props("java.io.tmpdir"), "graft_artifacts").getAbsolutePath)
+    graft.operators.ArtifactStore.useStableRoot(spark)
     try Lake.region(spark, sfDir).groupBy("r_name").count().count() catch { case _: Throwable => }
     for (name <- args.drop(1)) {
       val fn = SparkEntry.queries(name)

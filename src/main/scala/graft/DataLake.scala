@@ -174,7 +174,7 @@ final case class DataLake(spark: SparkSession, dir: String) {
     // exact dedup — but content that hot is exactly what exact dedup
     // just collapsed). One signature+verify pass per corpus version,
     // shared with the whole dedup family, instead of a private rerun.
-    val keptPairs = NearDupArtifact.sharedPairs(spark, dir, threshold)
+    val keptPairs = DedupOps.sharedNearDups(spark, dir, threshold)
       .join(afterExact.select(col("doc_id").as("doc_a")), Seq("doc_a"), "left_semi")
       .join(afterExact.select(col("doc_id").as("doc_b")), Seq("doc_b"), "left_semi")
       .select(col("doc_a"), col("doc_b"))

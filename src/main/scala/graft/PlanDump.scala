@@ -24,8 +24,7 @@ object PlanDump {
       .config("spark.sql.shuffle.partitions", threads.toString)
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    spark.conf.set("spark.graft.artifactRoot",
-      new java.io.File(sys.props("java.io.tmpdir"), "graft_artifacts").getAbsolutePath)
+    graft.operators.ArtifactStore.useStableRoot(spark)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     val executed = new scala.collection.mutable.ArrayBuffer[String]
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {

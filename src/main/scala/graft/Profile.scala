@@ -24,8 +24,7 @@ object Profile {
       .config("spark.sql.shuffle.partitions", threads.toString)
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    spark.conf.set("spark.graft.artifactRoot",
-      new java.io.File(sys.props("java.io.tmpdir"), "graft_artifacts").getAbsolutePath)
+    graft.operators.ArtifactStore.useStableRoot(spark)
 
     val jobs = ArrayBuffer.empty[JobRow]
     val starts = scala.collection.concurrent.TrieMap.empty[Int, (Long, String)]

@@ -33,15 +33,7 @@ object Verify {
       .config("spark.cleaner.periodicGC.interval", "5min")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // stable artifact root (unless the deployment names one): lets a
-    // SECOND driver run in a fresh JVM reuse the shared kNN/basket/
-    // near-dup/trade artifacts instead of rebuilding them — the lake dir
-    // itself may be read-only, so the sidecar lives under tmp, keyed by
-    // lake hash and staleness-probed by corpus fingerprint either way
-    if (graft.operators.ArtifactStore.configuredRoot(spark).isEmpty)
-      spark.conf.set("spark.graft.artifactRoot",
-        new java.io.File(sys.props("java.io.tmpdir"), "graft_artifacts")
-          .getAbsolutePath)
+    graft.operators.ArtifactStore.useStableRoot(spark)
     new java.io.File(outDir).mkdirs()
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -625,7 +625,7 @@ object AnnOps {
   /** Rank an already-materialized candidate-pairs frame (vec_a, vec_b,
     * cos_sim) into the k-NN graph: symmetrize the undirected pairs and
     * keep each source's top k. The cheap half of [[knnGraph]], split out
-    * so a persisted [[KnnGraphArtifact]] can feed it without re-running
+    * so the shared [[sharedKnnPairs]] can feed it without re-running
     * candidate generation. */
   def knnFromPairs(pairs: DataFrame, k: Int): DataFrame = {
     val both = pairs.select(col("vec_a").as("src"), col("vec_b").as("dst"),
@@ -641,12 +641,34 @@ object AnnOps {
       .orderBy(col("src"), col("rnk"))
   }
 
+  /** Shared bucketed candidate pairs (`vec_a < vec_b`, exact cosine) of
+    * the embeddings table, definitionally identical to the inline
+    * [[bucketedPairs]] under the same layout: one corpus shuffle keyed by
+    * LSH bucket + exact cosine is the graph family's expensive piece, and
+    * the pairs are its LOWEST shared form — hard negatives need the label
+    * filter BEFORE ranking. */
+  def sharedKnnPairs(spark: SparkSession, dir: String): DataFrame =
+    ArtifactStore.shared(spark, dir, "knn_pairs", Seq("embeddings")) {
+      bucketedPairs(Lake.embeddings(spark, dir)
+        .select(col("vec_id"), col("embedding")), dim = 64)
+    }
+
+  /** Shared RANKED k-NN graph, derived from [[sharedKnnPairs]]: the
+    * symmetrize + per-source top-k window was one ~10.7 s / 96.9 MB
+    * shuffle job at sf1 repeated identically by every graph-family
+    * consumer, so it is materialized once per (corpus, k). Consumers
+    * that need the pre-ranking candidates keep reading the pairs. */
+  def sharedKnnGraph(spark: SparkSession, dir: String,
+                     k: Int = 5): DataFrame =
+    ArtifactStore.shared(spark, dir, "knn_graph", Seq("embeddings"), s"k$k") {
+      knnFromPairs(sharedKnnPairs(spark, dir), k)
+    }
+
   /** Lake-bound registered form: 5-NN graph over the embeddings table,
-    * ranked from the session-shared persisted pairs artifact — the graph
-    * family (kNN graph, triangles, link prediction, hard negatives) pays
-    * for candidate generation ONCE per session, not once per query. */
+    * ranked from [[sharedKnnPairs]] on every call — the graph is this
+    * query's declared result, so it never reads [[sharedKnnGraph]]. */
   def knnGraph(spark: SparkSession, dir: String): DataFrame =
-    knnFromPairs(KnnGraphArtifact.sharedPairs(spark, dir), k = 5)
+    knnFromPairs(sharedKnnPairs(spark, dir), k = 5)
 
   /** HNSW-class GRAPH ANN: greedy beam search NAVIGATING the kNN graph
     * instead of hashing into buckets — the third ANN family beside
@@ -664,7 +686,7 @@ object AnnOps {
     * shuffled and no all-pairs product exists. Rounds are a driver loop
     * of tiny jobs (the SCD2-stream discipline); per-round
     * localCheckpoint truncates the growing lineage. The navigable graph
-    * itself rides the persisted [[KnnGraphArtifact]] — build once per
+    * itself rides the shared [[sharedKnnGraph]] — build once per
     * corpus version, search forever.
     *
     * Determinism: expansion set and beam selection derive from exact
@@ -676,7 +698,7 @@ object AnnOps {
     val emb = Lake.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding"))
     val queries = defaultQueries(emb, nQueries)
-    val edges = KnnGraphArtifact.sharedGraph(spark, dir, graphK)
+    val edges = sharedKnnGraph(spark, dir, graphK)
       .select(col("src"), col("dst"))
       .localCheckpoint(true) // every round re-reads it; materialize once
     // deterministic entry points: the nEntries smallest non-query ids
@@ -756,9 +778,9 @@ object AnnOps {
   }
 
   /** Lake-bound registered form: 3 hard negatives per vector, candidates
-    * from the session-shared persisted pairs artifact. */
+    * from [[sharedKnnPairs]]. */
   def hardNegatives(spark: SparkSession, dir: String): DataFrame =
-    hardNegativesFromPairs(KnnGraphArtifact.sharedPairs(spark, dir),
+    hardNegativesFromPairs(sharedKnnPairs(spark, dir),
       Lake.embeddings(spark, dir).select(col("vec_id"), col("label")), k = 3)
 
   /** Bucketed rows with oversized buckets filtered out. The per-bucket
@@ -1347,7 +1369,7 @@ object AnnOps {
     * are counted in `n_vecs` but cast no vote, so a silent recall hole
     * shows up as coverage < 1, never as inflated accuracy.
     *
-    * Scale: the graph rides the persisted [[KnnGraphArtifact]] (built
+    * Scale: the graph rides the shared [[sharedKnnGraph]] (built
     * once per corpus version); the vote is one aggregate over its ≤ k·n
     * rows, labels attach by broadcast of the node-sized (id, label)
     * projection, and accuracy/coverage are count/count quotients →
@@ -1355,7 +1377,7 @@ object AnnOps {
   def knnLabelEval(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
     val emb = Lake.embeddings(spark, dir)
       .select(col("vec_id"), col("label"))
-    val edges = KnnGraphArtifact.sharedGraph(spark, dir, k)
+    val edges = sharedKnnGraph(spark, dir, k)
       .select(col("src"), col("dst"))
     val votes = edges
       .join(broadcast(emb.select(col("vec_id").as("dst"),
@@ -1398,14 +1420,14 @@ object AnnOps {
     * honest "no mixing to measure").
     *
     * Shape: the canonical edge distinct over the shared
-    * [[KnnGraphArtifact]], two broadcast label attaches, one endpoint
+    * [[sharedKnnGraph]], two broadcast label attaches, one endpoint
     * reduce; output is ONE row. */
   def labelHomophily(spark: SparkSession, dir: String,
                      k: Int = 5): DataFrame = {
     val dec38 = DecimalType(38, 0)
     val emb = Lake.embeddings(spark, dir)
       .select(col("vec_id"), col("label"))
-    val cnn = KnnGraphArtifact.sharedGraph(spark, dir, k)
+    val cnn = sharedKnnGraph(spark, dir, k)
       .filter(col("src") =!= col("dst"))
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
@@ -1465,7 +1487,7 @@ object AnnOps {
     val emb = Lake.embeddings(spark, dir)
       .select(col("vec_id"),
         dotProductF(col("embedding"), col("embedding")).as("n2"))
-    val pairs = KnnGraphArtifact.sharedPairs(spark, dir)
+    val pairs = sharedKnnPairs(spark, dir)
       .select(col("vec_a"), col("vec_b"), col("cos_sim"))
     val sym = pairs.select(col("vec_a").as("src"), col("vec_b").as("dst"),
         col("cos_sim").as("s"))

@@ -3,12 +3,19 @@ package graft.operators
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Lake-resident versioned store for the shared derived artifacts
-  * (kNN candidate pairs, baskets, verified near-dup pairs, trade
-  * graph): the cross-JVM generalization of the [[AnnIndex]] `v=N` /
-  * `_SUCCESS` slot discipline.
+/** Lake-resident versioned store for the shared derived artifacts: the
+  * cross-JVM generalization of the [[AnnIndex]] `v=N` / `_SUCCESS` slot
+  * discipline. [[shared]] is the one entry point; each family is one
+  * short `def` in the operator object whose code derives it:
+  *   - `baskets` — [[Relational.sharedBaskets]] (lineitem)
+  *   - `recserve` — [[Relational.sharedRecs]] (lineitem, orders)
+  *   - `neardup`, keyed by the threshold's bits in hex —
+  *     [[DedupOps.sharedNearDups]] (documents)
+  *   - `trade` — [[GraphOps.sharedTradeEdges]] (lineitem, orders)
+  *   - `knn_pairs` — [[AnnOps.sharedKnnPairs]] (embeddings)
+  *   - `knn_graph`, keyed `k<k>` — [[AnnOps.sharedKnnGraph]] (embeddings)
   *
-  * Why: the four shared artifacts were app-scoped temp sidecars — built
+  * Why: the shared artifacts were app-scoped temp sidecars — built
   * once per session, then thrown away with the JVM, so Verify, Bench
   * and user sessions each paid the build again. The 100 TB shape is
   * build-once-per-CORPUS-VERSION: a stable sidecar root holds `v=N`
@@ -16,10 +23,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * derived from, and any session whose corpus fingerprint matches a
   * committed slot just reads it.
   *
+  * Declared results are never shared: a query whose declared RESULT is
+  * an artifact computes it on every call — `q_recommend` (the CF
+  * serving table) and `q_knn_graph` (the ranked graph) — so only the
+  * consumers that take it as an INPUT read the store. `q_cf_eval` must
+  * never read a model fitted on all orders: its leave-last-out retrain
+  * bypasses `recserve` (the no-leakage discipline).
+  *
   * Layout per family dir:
   * {{{
-  * <root>/<family>[_<key>]/v=N/data/   (parquet, _SUCCESS-gated)
-  * <root>/<family>[_<key>]/v=N/fp      (fingerprint file, written LAST)
+  * <root>/<family>_<hex lakeDir.hashCode>[_<key>]/v=N/data/  (parquet, _SUCCESS-gated)
+  * <root>/<family>_<hex lakeDir.hashCode>[_<key>]/v=N/fp     (fingerprint file, written LAST)
   * }}}
   * A version is complete iff `fp` exists (it is written after the data
   * commit, so a crashed build is invisible). Staleness is probed on
@@ -43,10 +57,22 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 private[graft] object ArtifactStore {
 
   /** Stable artifact root if configured; None → per-app scratch. */
-  def configuredRoot(spark: SparkSession): Option[String] =
+  private def configuredRoot(spark: SparkSession): Option[String] =
     spark.conf.getOption("spark.graft.artifactRoot")
       .orElse(sys.env.get("SPARK_GRAFT_ARTIFACT_ROOT"))
       .filter(_.nonEmpty)
+
+  /** For the dev mains: keep any configured root, otherwise use
+    * `<java.io.tmpdir>/graft_artifacts`, so a second run in a fresh JVM
+    * reuses the artifacts a prior run built and measures query cost,
+    * not the one-time builds. The lake dir itself may be read-only, so
+    * the sidecar lives under tmp, keyed by lake hash and
+    * staleness-probed by corpus fingerprint either way. */
+  def useStableRoot(spark: SparkSession): Unit =
+    if (configuredRoot(spark).isEmpty)
+      spark.conf.set("spark.graft.artifactRoot",
+        new java.io.File(sys.props("java.io.tmpdir"), "graft_artifacts")
+          .getAbsolutePath)
 
   /** Family directory under the resolved root. `key` disambiguates
     * parameterizations (e.g. a near-dup threshold). */
@@ -107,10 +133,10 @@ private[graft] object ArtifactStore {
     * both the shared file-listing cache and any registered plan-fragment
     * cache rooted at these paths may still describe the PRE-rewrite
     * files — serving erased rows into the fresh artifact. Metadata-only;
-    * families call it as the first line of their build lambda, so it
-    * runs exactly when a rebuild is about to. */
-  def refreshSources(spark: SparkSession, lakeDir: String,
-                     tables: Seq[String]): Unit =
+    * [[shared]] calls it first thing in its build, so it runs exactly
+    * when a rebuild is about to. */
+  private def refreshSources(spark: SparkSession, lakeDir: String,
+                             tables: Seq[String]): Unit =
     tables.foreach(t => spark.catalog.refreshByPath(s"$lakeDir/$t.parquet"))
 
   /** Complete versions (ascending) with their stored fingerprints. */
@@ -203,6 +229,24 @@ private[graft] object ArtifactStore {
       // our own commit is equally correct (identical derivation)
       served.get
     }
+  }
+
+  /** Serve the `family` artifact of `lakeDir` derived from `tables`:
+    * read back the newest committed version whose corpus fingerprint
+    * over `tables` matches; on a miss refresh exactly those `tables`,
+    * write `build` as parquet into the staging path, commit it as the
+    * next version and read that back. `key` disambiguates
+    * parameterizations of one family (a threshold, a k). */
+  def shared(spark: SparkSession, lakeDir: String, family: String,
+             tables: Seq[String], key: String = "")
+            (build: => DataFrame): DataFrame = {
+    val dir = familyDir(spark, lakeDir, family, key)
+    val fp = corpusFingerprint(spark, lakeDir, tables)
+    val dataDir = resolve(spark, dir, fp) { out =>
+      refreshSources(spark, lakeDir, tables)
+      build.write.mode("overwrite").parquet(out)
+    }
+    spark.read.parquet(dataDir)
   }
 
   /** Drop all but the newest `keepLast` versions. Staging leftovers are

@@ -274,8 +274,22 @@ object DedupOps extends org.apache.spark.internal.Logging {
     labels.orderBy(col("doc_id"))
   }
 
+  /** Shared verified near-dup pairs (`doc_a`, `doc_b`, `jaccard`) of the
+    * raw document corpus, one family dir per threshold: the signature +
+    * banding + exact-verify pipeline is the dedup family's expensive
+    * piece, read by the pair report, the clusters, the leakage-safe split
+    * and the recall audit. Consumers that dedup a DERIVED corpus keep
+    * their inline pipeline — pairs over a subset are not the raw-corpus
+    * pairs restricted. */
+  def sharedNearDups(spark: SparkSession, dir: String,
+                     threshold: Double = 0.6): DataFrame =
+    ArtifactStore.shared(spark, dir, "neardup", Seq("documents"),
+        java.lang.Long.toHexString(java.lang.Double.doubleToLongBits(threshold))) {
+      nearDupPairs(Lake.documents(spark, dir), threshold)
+    }
+
   def nearDupClusters(spark: SparkSession, dir: String): DataFrame =
-    clustersFromPairs(NearDupArtifact.sharedPairs(spark, dir)
+    clustersFromPairs(sharedNearDups(spark, dir)
       .select(col("doc_a"), col("doc_b")))
 
   /** Quality-aware near-dup survivorship — the POLICY layer over
@@ -358,7 +372,7 @@ object DedupOps extends org.apache.spark.internal.Logging {
   def nearDupPairs(spark: SparkSession, dir: String): DataFrame =
     // lake-bound form reads the shared verified-pairs artifact (built on
     // first use this session); re-apply the report ordering on read
-    NearDupArtifact.sharedPairs(spark, dir)
+    sharedNearDups(spark, dir)
       .orderBy(col("doc_a"), col("doc_b"))
 
   /** SimHash bit width and banding layout: 60 bits ([[TextOps
@@ -474,8 +488,8 @@ object DedupOps extends org.apache.spark.internal.Logging {
       AnnOps.bucketedPairs(emb, dim, tables, bits, maxBucketSize), threshold)
 
   /** Threshold screen over an already-materialized candidate-pairs frame
-    * — lets the lake-bound form ride the session-shared
-    * [[KnnGraphArtifact]] pairs instead of re-bucketing. */
+    * — lets the lake-bound form ride the shared
+    * [[AnnOps.sharedKnnPairs]] instead of re-bucketing. */
   private def nearDupsFromPairs(pairs: DataFrame,
                                 threshold: Double): DataFrame =
     pairs.filter(col("cos_sim") >= threshold)
@@ -486,7 +500,7 @@ object DedupOps extends org.apache.spark.internal.Logging {
     * embedding spaces use 0.85–0.95). Candidates come from the shared
     * pairs artifact — same layout parameters, definitionally identical. */
   def embeddingNearDups(spark: SparkSession, dir: String): DataFrame =
-    nearDupsFromPairs(KnnGraphArtifact.sharedPairs(spark, dir),
+    nearDupsFromPairs(AnnOps.sharedKnnPairs(spark, dir),
       threshold = 0.4)
 
   /** SEMANTIC near-dup clusters: connected components over the
@@ -1243,7 +1257,7 @@ object DedupOps extends org.apache.spark.internal.Logging {
     dedupRecall(docs, nearDupPairs(docs, threshold), threshold, sampleBuckets)
 
   /** Core with the found-pairs frame supplied — the lake-bound form
-    * passes the shared [[NearDupArtifact]] so the audit never re-runs
+    * passes [[sharedNearDups]] so the audit never re-runs
     * the production pipeline it is auditing. */
   def dedupRecall(docs: DataFrame, foundPairs: DataFrame, threshold: Double,
                   sampleBuckets: Int): DataFrame = {
@@ -1330,7 +1344,7 @@ object DedupOps extends org.apache.spark.internal.Logging {
 
   def dedupRecall(spark: SparkSession, dir: String): DataFrame =
     dedupRecall(Lake.documents(spark, dir),
-      NearDupArtifact.sharedPairs(spark, dir), threshold = 0.6,
+      sharedNearDups(spark, dir), threshold = 0.6,
       sampleBuckets = 2000)
 
   /** Dedup savings forecast per source: the bytes (chars) that dropping
@@ -1369,7 +1383,7 @@ object DedupOps extends org.apache.spark.internal.Logging {
     * membership frame, left-joined; bucket boundaries evaluate the SAME
     * floor(quality·10) doubles in both engines. */
   def qualityDupCalibration(spark: SparkSession, dir: String): DataFrame = {
-    val members = NearDupArtifact.sharedPairs(spark, dir)
+    val members = sharedNearDups(spark, dir)
       .select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
       .distinct()
       .withColumn("is_dup", lit(1L))

@@ -429,7 +429,7 @@ object Relational {
     // reads the shared basket artifact three times (pairs, item counts,
     // total) — re-scanning the bounded materialized frame, never the
     // fact table
-    val baskets = BasketArtifact.sharedBaskets(spark, dir)
+    val baskets = sharedBaskets(spark, dir)
     val pairCounts = basketPairCounts(baskets, minOrders)
     val itemCounts = baskets.select(explode(col("items")).as("part"))
       .groupBy(col("part")).agg(count(lit(1)).as("n_orders"))
@@ -931,6 +931,17 @@ object Relational {
     * baskets, then a pair-keyed partial-aggregated count and a bounded
     * TakeOrderedAndProject head. The self-join formulation the oracle
     * uses would shuffle the fact table twice. */
+  /** Shared per-order item sets (`l_orderkey`, sorted distinct `items`)
+    * read by every basket consumer: the fact-table shuffle keyed by order
+    * is the family's expensive piece, and rebuilding it per query tripled
+    * the family's sweep cost. */
+  def sharedBaskets(spark: SparkSession, dir: String): DataFrame =
+    ArtifactStore.shared(spark, dir, "baskets", Seq("lineitem")) {
+      Lake.lineitem(spark, dir)
+        .groupBy(col("l_orderkey"))
+        .agg(array_sort(collect_set(col("l_partkey"))).as("items"))
+    }
+
   /** Per-basket ordered-pair fan-out shared by the market-basket family:
     * k·(k−1)/2 struct rows per basket, grouped to pair counts. */
   private def basketPairCounts(baskets: DataFrame, minOrders: Long): DataFrame =
@@ -948,7 +959,7 @@ object Relational {
 
   def copurchase(spark: SparkSession, dir: String,
                  minOrders: Long = 2, topK: Int = 20): DataFrame =
-    basketPairCounts(BasketArtifact.sharedBaskets(spark, dir), minOrders)
+    basketPairCounts(sharedBaskets(spark, dir), minOrders)
       .select(col("part_a"), col("part_b"), col("n_ab").as("n_orders"))
       .orderBy(col("n_orders").desc, col("part_a"), col("part_b"))
       .limit(topK)
@@ -971,7 +982,7 @@ object Relational {
     // one fact scan ever: both the pair counts and the per-item counts
     // read the shared basket artifact (the materialized shuffle output
     // every basket consumer needs)
-    val baskets = BasketArtifact.sharedBaskets(spark, dir)
+    val baskets = sharedBaskets(spark, dir)
     val itemN = baskets.select(explode(col("items")).as("pk"))
       .groupBy(col("pk")).agg(count(lit(1)).as("n_item"))
     basketPairCounts(baskets, minOrders)
@@ -1002,7 +1013,7 @@ object Relational {
   def itemKnnRecommend(spark: SparkSession, dir: String,
                        minOrders: Long = 2, topN: Int = 3): DataFrame = {
     val d6 = DecimalType(18, 6)
-    val baskets = BasketArtifact.sharedBaskets(spark, dir)
+    val baskets = sharedBaskets(spark, dir)
     val itemN = baskets.select(explode(col("items")).as("pk"))
       .groupBy(col("pk")).agg(count(lit(1)).as("n_item"))
     val sims = basketPairCounts(baskets, minOrders)
@@ -1221,6 +1232,14 @@ object Relational {
     out
   }
 
+  /** Shared [[itemKnnRecommend]] serving table, read by the coverage and
+    * novelty readouts: each rebuilt it inline, 250 s and 238 s at sf10,
+    * within noise of the build itself. */
+  def sharedRecs(spark: SparkSession, dir: String): DataFrame =
+    ArtifactStore.shared(spark, dir, "recserve", Seq("lineitem", "orders")) {
+      itemKnnRecommend(spark, dir)
+    }
+
   /** Catalog coverage + popularity bias of the [[itemKnnRecommend]]
     * serving table — the two aggregate health checks every recommender
     * dashboard pairs with the per-user ranking eval ([[cfHitRate]]):
@@ -1239,9 +1258,9 @@ object Relational {
     * existing cost. */
   def recCoverage(spark: SparkSession, dir: String): DataFrame = {
     // serving table via the shared artifact (one build per corpus
-    // fingerprint, the BasketArtifact discipline) — rebuilding it
-    // inline cost 250 s of this readout's 250 s at sf10
-    val recItems = RecServingArtifact.sharedRecs(spark, dir)
+    // fingerprint) — rebuilding it inline cost 250 s of this readout's
+    // 250 s at sf10
+    val recItems = sharedRecs(spark, dir)
       .select(col("partkey")).distinct()
     val itemN = Lake.lineitem(spark, dir)
       .groupBy(col("l_partkey"))
@@ -1294,7 +1313,7 @@ object Relational {
           .cast("double") / 1e8).cast(d8).as("p"))
     // shared serving-table artifact, as in [[recCoverage]] — the inline
     // rebuild was 238 s of this readout's 238 s at sf10
-    val recs = RecServingArtifact.sharedRecs(spark, dir)
+    val recs = sharedRecs(spark, dir)
       .select(col("partkey"))
       .join(withP, col("partkey") === col("l_partkey"))
     val recAgg = recs.agg(count(lit(1)).as("n_recs"),
@@ -1322,11 +1341,11 @@ object Relational {
     * is C(k,3) per basket, cubic in basket size k — acceptable exactly
     * because baskets are small by nature (line items per order); for
     * heavy-tailed basket sizes, cap or sample big baskets first (the
-    * hot-bucket discipline). Reads the [[BasketArtifact]]: no fact
+    * hot-bucket discipline). Reads [[sharedBaskets]]: no fact
     * scan. */
   def frequentTriples(spark: SparkSession, dir: String,
                       minOrders: Long = 2, topK: Int = 20): DataFrame =
-    BasketArtifact.sharedBaskets(spark, dir)
+    sharedBaskets(spark, dir)
       .select(explode(expr(
         """flatten(flatten(transform(items, (x, i) ->
           |  transform(slice(items, i + 2, size(items)), (y, j) ->

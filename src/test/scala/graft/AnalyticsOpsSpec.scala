@@ -929,7 +929,7 @@ class AnalyticsOpsSpec extends SparkSpecBase {
     val nDocs = Lake.documents(spark, Sf)
       .filter(col("text").isNotNull).count()
     assert(rows.map(_._2).sum == nDocs, "buckets cover the corpus")
-    val members = graft.operators.NearDupArtifact.sharedPairs(spark, Sf)
+    val members = graft.operators.DedupOps.sharedNearDups(spark, Sf)
       .selectExpr("explode(array(doc_a, doc_b)) AS d")
       .distinct().count()
     assert(rows.map(_._3).sum == members, "dup mass equals pair membership")

@@ -552,4 +552,26 @@ class AnnSpec extends SparkSpecBase {
     assert(clusters.size > 1, "corpus must not collapse to one cluster")
     assert(out.forall(_.getDouble(2) >= 0.0), "squared distances")
   }
+
+  private def canonPairs(df: org.apache.spark.sql.DataFrame) =
+    df.select(col("vec_a"), col("vec_b"), round(col("cos_sim"), 4).as("s"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      .toSet
+
+  test("stored pairs equal inline bucketedPairs under the same layout") {
+    val emb = Lake.embeddings(spark, Sf)
+    val stored = canonPairs(AnnOps.sharedKnnPairs(spark, Sf))
+    val inline = canonPairs(AnnOps.bucketedPairs(
+      emb.select(col("vec_id"), col("embedding")), dim = 64))
+    assert(stored == inline, "artifact must be definitionally identical")
+  }
+
+  test("knn graph ranked from stored pairs equals the inline build") {
+    val emb = Lake.embeddings(spark, Sf)
+    val viaArtifact = AnnOps.knnGraph(spark, Sf)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(3))).toSet
+    val inline = AnnOps.knnGraph(emb, k = 5, dim = 64)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(3))).toSet
+    assert(viaArtifact == inline)
+  }
 }

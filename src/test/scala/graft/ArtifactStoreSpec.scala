@@ -8,9 +8,8 @@ import graft.operators.ArtifactStore
 /** The lake-resident versioned artifact store: build-once per corpus
   * fingerprint, cross-session reuse through a persistent root,
   * staleness-probed rebuild when the corpus changes, torn-build
-  * invisibility, and vacuum. The four shared artifact families
-  * (kNN pairs / baskets / near-dup pairs / trade graph) all resolve
-  * through this discipline. */
+  * invisibility, and vacuum. The six shared artifact families all
+  * resolve through this discipline via [[ArtifactStore.shared]]. */
 class ArtifactStoreSpec extends SparkSpecBase {
 
   private def tmp(prefix: String): String =
@@ -150,23 +149,41 @@ class ArtifactStoreSpec extends SparkSpecBase {
   }
 
   test("artifact-fed families resolve through a persistent root and reuse") {
-    // point the store at a persistent root via the session conf and
-    // prove a graph-family consumer builds once and reuses — the
-    // cross-JVM shape (the root, not the app id, keys the sidecar)
-    val root = tmp("graft_astore_root5")
+    // every family through a persistent root named by the session conf:
+    // its dir name is pinned byte for byte (persistent roots and the
+    // benchmark's per-family accounting key on it), the first call
+    // commits at most one version and a second call commits none
+    import graft.operators.{AnnOps, DedupOps, GraphOps, Relational}
+    val root = tmp("graft_astore_families")
+    val lakeKey = java.lang.Integer.toHexString(Sf.hashCode)
+    val thresholdKey = java.lang.Long.toHexString(
+      java.lang.Double.doubleToLongBits(0.6))
+    val families: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      s"baskets_$lakeKey" -> (() => Relational.sharedBaskets(spark, Sf)),
+      s"neardup_${lakeKey}_$thresholdKey" ->
+        (() => DedupOps.sharedNearDups(spark, Sf)),
+      s"recserve_$lakeKey" -> (() => Relational.sharedRecs(spark, Sf)),
+      s"trade_$lakeKey" -> (() => GraphOps.sharedTradeEdges(spark, Sf)),
+      s"knn_pairs_$lakeKey" -> (() => AnnOps.sharedKnnPairs(spark, Sf)),
+      s"knn_graph_${lakeKey}_k5" -> (() => AnnOps.sharedKnnGraph(spark, Sf)),
+      s"knn_graph_${lakeKey}_k3" -> (() => AnnOps.sharedKnnGraph(spark, Sf, 3)))
     spark.conf.set("spark.graft.artifactRoot", root)
     try {
-      val dir = graft.operators.ArtifactStore.familyDir(spark, Sf, "trade")
-      assert(dir.startsWith(root), s"family dir $dir must live under $root")
-      val e1 = graft.operators.TradeGraphArtifact.sharedEdges(spark, Sf)
-      val n1 = e1.count()
-      assert(n1 > 0)
-      val before = ArtifactStore.versions(spark, dir)
-      assert(before.size == 1, "first consumer commits exactly one version")
-      val e2 = graft.operators.TradeGraphArtifact.sharedEdges(spark, Sf)
-      assert(e2.count() == n1)
-      assert(ArtifactStore.versions(spark, dir) == before,
-        "second consumer must reuse the committed version")
+      for ((name, serve) <- families) {
+        val dir = s"$root/$name"
+        val before = ArtifactStore.versions(spark, dir)
+        val n1 = serve().count()
+        assert(n1 > 0, s"$name: empty artifact")
+        val after1 = ArtifactStore.versions(spark, dir)
+        assert(after1.nonEmpty, s"$name: no committed version under $root")
+        assert(after1.size - before.size <= 1,
+          s"$name: first call commits at most one version")
+        assert(serve().count() == n1)
+        assert(ArtifactStore.versions(spark, dir) == after1,
+          s"$name: second call must reuse the committed version")
+      }
+      val dirs = new java.io.File(root).list().toSet
+      assert(dirs == families.map(_._1).toSet, s"family dirs $dirs")
     } finally spark.conf.unset("spark.graft.artifactRoot")
   }
 }

@@ -190,7 +190,7 @@ class GovernanceSpec extends SparkSpecBase {
     // resolve MUST rebuild — serving the forgotten doc through a stale
     // near-dup pairs artifact would silently undo the erasure. Vacuum
     // then makes it durable by reclaiming the pre-erasure version.
-    import graft.operators.{ArtifactStore, NearDupArtifact}
+    import graft.operators.{ArtifactStore, DedupOps}
     val lake = java.nio.file.Files.createTempDirectory("graft_erase_lake").toString
     val root = java.nio.file.Files.createTempDirectory("graft_erase_root").toString
     // seed with the real corpus (it contains planted near-dups)
@@ -198,7 +198,7 @@ class GovernanceSpec extends SparkSpecBase {
       .write.parquet(s"$lake/documents.parquet")
     spark.conf.set("spark.graft.artifactRoot", root)
     try {
-      val pairs1 = NearDupArtifact.sharedPairs(spark, lake).collect()
+      val pairs1 = DedupOps.sharedNearDups(spark, lake).collect()
       assert(pairs1.nonEmpty, "corpus must yield near-dup pairs")
       val victim = pairs1.head.getLong(0)
       // erase: rewrite documents.parquet without the victim (staging dir
@@ -212,7 +212,7 @@ class GovernanceSpec extends SparkSpecBase {
       fs.rename(new org.apache.hadoop.fs.Path(s"$lake/documents_next.parquet"),
         new org.apache.hadoop.fs.Path(s"$lake/documents.parquet"))
       // the next resolve must observe the rewrite and rebuild
-      val pairs2 = NearDupArtifact.sharedPairs(spark, lake).collect()
+      val pairs2 = DedupOps.sharedNearDups(spark, lake).collect()
       assert(!pairs2.exists(r => r.getLong(0) == victim || r.getLong(1) == victim),
         "forgotten doc resurfaced through the refreshed artifact")
       val dir = ArtifactStore.familyDir(spark, lake, "neardup",
@@ -223,7 +223,7 @@ class GovernanceSpec extends SparkSpecBase {
       ArtifactStore.vacuum(spark, dir, keepLast = 1, stagingGraceMs = 0L)
       assert(ArtifactStore.versions(spark, dir).size == 1,
         "pre-erasure artifact version must be reclaimed")
-      assert(!NearDupArtifact.sharedPairs(spark, lake).collect().exists(r =>
+      assert(!DedupOps.sharedNearDups(spark, lake).collect().exists(r =>
         r.getLong(0) == victim || r.getLong(1) == victim),
         "post-vacuum serve must still exclude the forgotten doc")
     } finally spark.conf.unset("spark.graft.artifactRoot")

@@ -1,68 +1,21 @@
 package graft
 
-import org.apache.spark.sql.functions._
+import graft.operators.{AnnOps, ArtifactStore}
 
-import graft.operators.{AnnOps, KnnGraphArtifact}
-
-/** The shared kNN-graph artifact: persisted candidate pairs must equal the
-  * inline bucketing, the session-shared handle builds exactly once, and
+/** The shared kNN-graph artifact (the `knn_pairs` family of the artifact
+  * store): the session-shared pairs build exactly once per corpus and
   * every graph-family consumer derives from the same stored frame. */
 class KnnGraphArtifactSpec extends SparkSpecBase {
 
-  private def tmpDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
-
-  private def canon(df: org.apache.spark.sql.DataFrame) =
-    df.select(col("vec_a"), col("vec_b"), round(col("cos_sim"), 4).as("s"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      .toSet
-
-  test("stored pairs equal inline bucketedPairs under the same layout") {
-    val emb = Lake.embeddings(spark, Sf)
-    val dir = tmpDir("knn_pairs")
-    val v = KnnGraphArtifact.build(spark, dir, emb)
-    assert(v == 0L && KnnGraphArtifact.versions(spark, dir) == Seq(0L))
-    val stored = canon(KnnGraphArtifact.pairs(spark, dir))
-    val inline = canon(AnnOps.bucketedPairs(
-      emb.select(col("vec_id"), col("embedding")), dim = 64))
-    assert(stored == inline, "artifact must be definitionally identical")
-    val p = KnnGraphArtifact.params(spark, dir).collect().head
-    assert(p.getInt(0) == 64 && p.getInt(1) == AnnOps.DefaultTables)
-  }
-
   test("sharedPairs builds once per corpus and is reused by consumers") {
-    val shared = graft.operators.ArtifactStore
-      .familyDir(spark, Sf, "knn_pairs")
-    val before = graft.operators.ArtifactStore.versions(spark, shared).size
-    KnnGraphArtifact.sharedPairs(spark, Sf).count()
-    val after1 = graft.operators.ArtifactStore.versions(spark, shared).size
+    val shared = ArtifactStore.familyDir(spark, Sf, "knn_pairs")
+    val before = ArtifactStore.versions(spark, shared).size
+    AnnOps.sharedKnnPairs(spark, Sf).count()
+    val after1 = ArtifactStore.versions(spark, shared).size
     assert(after1 == math.max(before, 1), "first use builds at most once")
     // a second consumer call must NOT commit another version
     AnnOps.knnGraph(spark, Sf).count()
-    assert(graft.operators.ArtifactStore.versions(spark, shared).size == after1,
+    assert(ArtifactStore.versions(spark, shared).size == after1,
       "later graph-family queries reuse the artifact, never rebuild")
-  }
-
-  test("knn graph ranked from stored pairs equals the inline build") {
-    val emb = Lake.embeddings(spark, Sf)
-    val viaArtifact = AnnOps.knnGraph(spark, Sf)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(3))).toSet
-    val inline = AnnOps.knnGraph(emb, k = 5, dim = 64)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(3))).toSet
-    assert(viaArtifact == inline)
-  }
-
-  test("vacuum keeps the newest version and sweeps incomplete builds") {
-    val emb = Lake.embeddings(spark, Sf).limit(50)
-    val dir = tmpDir("knn_pairs_vac")
-    KnnGraphArtifact.build(spark, dir, emb)
-    KnnGraphArtifact.build(spark, dir, emb)
-    // a crashed build: directory without _SUCCESS-complete artifacts
-    new java.io.File(s"$dir/v=9").mkdirs()
-    assert(KnnGraphArtifact.versions(spark, dir) == Seq(0L, 1L))
-    val dropped = KnnGraphArtifact.vacuum(spark, dir, keepLast = 1)
-    assert(dropped == Seq(0L, 9L), s"dropped $dropped")
-    assert(KnnGraphArtifact.versions(spark, dir) == Seq(1L))
-    assert(KnnGraphArtifact.pairs(spark, dir).count() > 0)
   }
 }

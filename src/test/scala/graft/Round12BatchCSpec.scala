@@ -360,7 +360,7 @@ class Round12BatchCSpec extends SparkSpecBase {
         s += a(i).toDouble * b(i).toDouble; i += 1 }
       s
     }
-    val pairs = graft.operators.KnnGraphArtifact.sharedPairs(spark, Sf)
+    val pairs = graft.operators.AnnOps.sharedKnnPairs(spark, Sf)
       .select(col("vec_a"), col("vec_b"), col("cos_sim")).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     val sym = pairs.flatMap { case (a, b, s) =>
